@@ -154,15 +154,16 @@ class MapReduceJob:
             return lines.flatMap(mapper)
         # Executable contract: spawned once per partition vs once per input
         # file in the reference (worker/__main__.py:104-110) — equivalent for
-        # the stateless line-streaming contract the framework defines.
-        return lines.pipe(mapper)
+        # the stateless line-streaming contract the framework defines.  A
+        # non-zero exit fails the task instead of truncating its output.
+        return lines.pipe(mapper, checkCode=True)
 
     def _apply_reducer(self, sorted_lines):
         reducer = self.request.reducer_executable
         if not callable(reducer):
             # One reducer process per reduce partition, fed the sorted merged
             # stream (worker/__main__.py:193-202).
-            return sorted_lines.pipe(reducer)
+            return sorted_lines.pipe(reducer, checkCode=True)
 
         def reduce_partition(it: Iterator[str]) -> Iterator[str]:
             for key, group in groupby(it, key=extract_key):

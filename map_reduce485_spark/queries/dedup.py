@@ -301,7 +301,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B (tools/ab_code.py, sf0.1): CPU 0.69x warm / 0.62x cold, wall
     # 0.92x/0.93x; the cache_scoped alternative bought wall 0.54x but paid
     # CPU 2.46x building/reading the array-typed InMemoryRelation —
-    # rejected (tools/r14_variants.py::dedup_minhash_lsh_v2).
+    # rejected (dedup_minhash_lsh_v2 in tools/r14_variants.py, commit 2429624).
     # Band bi's first-match filter only reads PRIOR digests d0..d(bi-1)
     # (and the last digest never at all), so later slots ride as NULLs —
     # one null bit each in the band shuffle instead of a 32-char hex
@@ -1461,7 +1461,8 @@ def dedup_incremental_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # new/corpus split, whose differing filters defeat exchange reuse.
     # A/B: JVM CPU 0.79x warm / 0.55x cold.  (cache_scoped(sig) also
     # measured: wall 0.81x but CPU 1.52x — cache tax again; rejected,
-    # tools/r14_variants.py::dedup_incremental_arrivals_v2.)
+    # dedup_incremental_arrivals_v2 in tools/r14_variants.py, commit
+    # 2429624.)
     structs = ", ".join(
         "struct({bi} as band_id, md5(concat({cols})) as band)".format(
             bi=bi, cols=", ".join(f"h{j}" for j in band)

@@ -8,6 +8,7 @@ import hashlib
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob, md5_partition
 from map_reduce485_spark.mapreduce.job import extract_key
@@ -91,6 +92,19 @@ def test_wordcount_executable(spark, text_input, tmp_path):
             got[k] = got.get(k, 0) + int(v)
     assert got["the"] == 3 and got["fox"] == 3 and got["über"] == 1
     assert sum(got.values()) == 17
+
+
+def test_failing_executable_fails_the_job(spark, text_input, tmp_path):
+    """A mapper that exits non-zero after emitting output must fail the job,
+    not leave truncated part files behind a successful run()."""
+    mapper = tmp_path / "fail.sh"
+    mapper.write_text("#!/bin/sh\nprintf 'partial\\t1\\n'\nexit 3\n")
+    command = f"sh {mapper}"
+    out = tmp_path / "out"
+    with pytest.raises(Py4JJavaError) as exc:
+        MapReduceJob(spark, JobRequest(str(text_input), str(out), command, "cat", 2, 1)).run()
+    assert command in str(exc.value)
+    assert not (out / "_SUCCESS").exists()
 
 
 def test_md5_placement_and_sorted_runs(spark, text_input, tmp_path):

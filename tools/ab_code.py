@@ -5,6 +5,9 @@ same rows (collected, sorted) as the registered query before any timing.
 
     python tools/ab_code.py --name decontaminate_eval_overlap \
         --variant tools.r13_variants:decontaminate_eval_overlap_v2 [--reps 2]
+
+(`tools/r13_variants.py` was deleted; `git show 2429624:tools/r13_variants.py`
+restores it.)
 """
 
 from __future__ import annotations
