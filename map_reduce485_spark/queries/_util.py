@@ -61,6 +61,10 @@ def release_scoped_caches() -> int:
 
     Returns the number released.  Blocking=False: eviction proceeds async so
     the next query isn't stalled behind storage cleanup.
+
+    A released cache only costs a recompute, but a released checkpoint is
+    gone: every frame built on a :func:`checkpoint_scoped` frame is invalid
+    after this call, and running one fails on missing blocks.
     """
     n = 0
     while _SCOPED_CACHES:
@@ -102,7 +106,11 @@ def checkpoint_scoped(df: DataFrame) -> DataFrame:
     ``GraphX``/``ALS`` checkpoint usage).  Release goes through
     :func:`release_scoped_caches`, and callers that drop a generation
     eagerly (two-generation loops) can call the returned frame's
-    ``rdd``-level release via :func:`release_checkpoint`."""
+    ``rdd``-level release via :func:`release_checkpoint`.
+
+    Release invalidates, it does not de-cache: the checkpoint has no lineage
+    to recompute from, so after release the returned frame, and every frame
+    built on it, fails when run.  Collect what the caller needs first."""
     sc = df.sparkSession.sparkContext
     try:
         before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}

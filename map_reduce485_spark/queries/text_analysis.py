@@ -3181,15 +3181,20 @@ def gopher_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metric definitions kept exactly rational so both engines agree
     bit-for-bit: the denominator is total characters over ALL n-gram
     occurrences of that n (not raw doc chars — self-normalizing, ≤ 1 by
-    construction); the "most frequent" tie-break is (count, gram length,
-    gram) lexicographic max, so the winner is deterministic; each
+    construction); the "most frequent" gram is the max of the struct
+    (cnt, glen, xxhash64(gram)), and the output reads only cnt * glen,
+    which any tie on (cnt, glen) leaves unchanged, so the hash tie-break
+    never shows (the oracle breaks ties on the gram string); each
     fraction is ONE bigint/bigint division (correctly-rounded IEEE on
     both engines), and the pass flags are exact comparisons of those
-    doubles.  Source texts have no newlines, so Gopher's line-dup
-    metrics have no domain here and are deliberately absent.
+    doubles.  Caveat: grams are counted by their 64-bit hash, so two
+    distinct grams of one (doc, n) that collide are counted as one gram
+    and the result can differ from the oracle.  Source texts have no
+    newlines, so Gopher's line-dup metrics have no domain here and are
+    deliberately absent.
 
     Scale shape: one explode over the four n levels (map-side, ~4x token
-    volume), ONE shuffle to groupBy(doc_id, n, gram) with map-side
+    volume), ONE shuffle to groupBy(doc_id, n, ghash) with map-side
     combine, then two narrowing aggregations (doc_id, n) -> (doc_id) on
     already-co-partitioned keys.  No windows, no joins, no driver state —
     the same linear shape as `repetition_ratio`, just with the grouped

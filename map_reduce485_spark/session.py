@@ -19,6 +19,12 @@ Local-mode knobs mirror what we would set on a real cluster:
   CPython 3.13 only drops the cache entry there (``zipimport.py:276-278``),
   so the patch is harmless.
   It is a SparkContext conf: a session not built here runs without it.
+- Streaming checkpoints use ``FileSystemBasedCheckpointFileManager``.  With
+  no native ``libhadoop``, the default manager's ``FileContext`` rename of
+  each WAL, offset, commit and state-delta file forks a ``readlink`` per path
+  check (~330 per 2-microbatch stream); ``FileSystem.rename`` forks none.
+  Both managers refuse a second writer of a batch file by check-then-rename
+  locally (on HDFS the rename fails).  ``chmod`` still forks per new file.
 """
 
 from __future__ import annotations
@@ -29,6 +35,26 @@ from pyspark.sql import SparkSession
 
 # the directory holding both this package and the mr485_pyworker daemon
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+def sql_conf(shuffle_partitions: int) -> dict[str, str]:
+    """The runtime-settable SQL confs every engine session runs with."""
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+        ),
+    }
+
+
+# Sessions built by get_spark or tuned by tune_session, by id(); the value
+# pins the session, so a stopped session's reused id never reads as tuned.
+_TUNED: dict[int, SparkSession] = {}
 
 
 def get_spark(
@@ -49,24 +75,28 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=sql_conf(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # bucketed tables (co-located joins) land here, not in the repo cwd
         .config("spark.sql.warehouse.dir", "/tmp/mr485_spark_warehouse")
         .config("spark.python.daemon.module", "mr485_pyworker")
         # Spark merges this with the driver's PYTHONPATH for its workers
         .config("spark.executorEnv.PYTHONPATH", _ROOT)
+        .config(map=extra_conf or {})
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _TUNED[id(spark)] = spark
     return spark
+
+
+def tune_session(spark: SparkSession) -> None:
+    """Apply ``sql_conf`` to a session the engine did not build, such as the
+    driver's plain SparkSession (200 shuffle partitions, 10 MB broadcast
+    threshold).  A session from ``get_spark`` keeps its own values."""
+    if _TUNED.get(id(spark)) is spark:
+        return
+    for k, v in sql_conf(max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 8)).items():
+        spark.conf.set(k, v)
+    _TUNED[id(spark)] = spark
